@@ -20,11 +20,17 @@ class CheckpointJanitor:
 
     def __init__(self, spark: SparkSession):
         self._sc = spark.sparkContext
-        self._before = set(self._sc._jsc.getPersistentRDDs().keySet())
+        self._before = self._persistent_ids()
+
+    def _persistent_ids(self) -> set[int]:
+        """Ids in the persistent-RDD map, fetched as one joined string:
+        iterating the Java key set costs a py4j round trip per element,
+        and the map grows with every RDD the session keeps persisted."""
+        keys = self._sc._jsc.sc().getPersistentRDDs().keys().mkString(",")
+        return {int(k) for k in keys.split(",") if k}
 
     def _stale_ids(self) -> list:
-        jmap = self._sc._jsc.getPersistentRDDs()
-        return sorted(set(jmap.keySet()) - self._before)
+        return sorted(self._persistent_ids() - self._before)
 
     def free_all_but_latest(self) -> None:
         """Free every tracked checkpoint except the newest (the one the

@@ -23,10 +23,12 @@ is a pure function of the input — no RNG, no timestamps.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hdfs_mapreduce_spark.functions.hashing import MERSENNE_31, h56, perm_params
+from hdfs_mapreduce_spark.functions.jvm_memo import JvmMemo
 from hdfs_mapreduce_spark.functions.text import tokens
 
 # MinHash configuration: 16 permutations in 8 bands of 2 → LSH threshold
@@ -56,6 +58,15 @@ WIDE_BANDS = 8
 # measured the junk term clearly (120k candidates at 79% junk under
 # r=2 at 500k docs×10); every shipped fixture is far below it.
 AUTO_WIDE_MIN_DOCS = 1_000_000
+
+
+# Constant Column trees of the sketch path, built once per key (shape,
+# column names, threshold) and per live SparkContext. Every ``F.*`` call
+# is a py4j round trip, and rebuilding these trees cost ~1,500 of the
+# ~4,600 round trips of an online-ingest micro-batch (the 16-32 MIN
+# aggregates alone). A Column is an unresolved expression, so one tree
+# serves any number of plans.
+_COLUMNS = JvmMemo(lambda: SparkContext._active_spark_context)
 
 
 # Session-level memo for auto_band_config's count probe, keyed on
@@ -164,10 +175,16 @@ def shingle_relation(
     this stage is pure map parallelism over input splits. Docs with 1..k-1
     tokens contribute their whole token string as one shingle; zero-token
     docs contribute nothing."""
-    toks = tokens(F.lower(F.col(text_col)))
-    base = df.select(
-        F.col(id_col).alias("doc"), toks.alias("tk"), F.size(toks).alias("cnt")
+    base, shingle, hashed = _COLUMNS.get(
+        ("shingle", id_col, text_col, k),
+        lambda: _shingle_columns(id_col, text_col, k),
     )
+    return df.select(*base).select(*shingle).select(*hashed)
+
+
+def _shingle_columns(id_col: str, text_col: str, k: int) -> tuple:
+    """The three select lists of ``shingle_relation``."""
+    toks = tokens(F.lower(F.col(text_col)))
     shingles = (
         F.when(
             F.col("cnt") >= k,
@@ -179,8 +196,11 @@ def shingle_relation(
         .when(F.col("cnt") > 0, F.array(F.array_join(F.col("tk"), " ")))
         .otherwise(F.array().cast("array<string>"))
     )
-    return base.select("doc", F.explode(shingles).alias("s")).select(
-        "doc", h56(F.col("s")).alias("x")
+    doc = F.col("doc")
+    return (
+        [F.col(id_col).alias("doc"), toks.alias("tk"), F.size(toks).alias("cnt")],
+        [doc, F.explode(shingles).alias("s")],
+        [doc, h56(F.col("s")).alias("x")],
     )
 
 
@@ -242,17 +262,29 @@ def _banded_sketch(
     no longer reveals it)."""
     if n_perm % n_bands:
         raise ValueError(f"n_perm={n_perm} not divisible by n_bands={n_bands}")
+    key_col, aggs, banded, exploded = _COLUMNS.get(
+        ("sketch", n_perm, n_bands),
+        lambda: _sketch_columns(n_perm, n_bands),
+    )
+    rel = shingle_relation(df, id_col, text_col)
+    return (
+        rel.groupBy(key_col).agg(*aggs).select(*banded).select(*exploded)
+    )
+
+
+def _sketch_columns(n_perm: int, n_bands: int) -> tuple:
+    """The grouping key, MinHash aggregates and two select lists of
+    ``_banded_sketch`` for one b/r point."""
     rows_per_band = n_perm // n_bands
     perms = PERMS if n_perm == N_PERM else perm_params(n_perm, seed=42)
     p = F.lit(MERSENNE_31)
-    rel = shingle_relation(df, id_col, text_col)
-    per_doc = rel.groupBy("doc").agg(
+    aggs = [
         F.collect_set("x").alias("sh"),
         *[
             F.min((F.lit(a) * (F.col("x") % p) + F.lit(b)) % p).alias(f"mh{i}")
             for i, (a, b) in enumerate(perms)
         ],
-    )
+    ]
     band_keys = F.array(
         *[
             F.xxhash64(
@@ -265,15 +297,16 @@ def _banded_sketch(
             for b in range(n_bands)
         ]
     )
-    return per_doc.select(
-        "doc", "sh", F.lit(rows_per_band).alias("rpb"), band_keys.alias("bkeys")
-    ).select(
-        "doc",
-        "sh",
-        "rpb",
-        "bkeys",
+    doc, sh = F.col("doc"), F.col("sh")
+    banded = [doc, sh, F.lit(rows_per_band).alias("rpb"), band_keys.alias("bkeys")]
+    exploded = [
+        doc,
+        sh,
+        F.col("rpb"),
+        F.col("bkeys"),
         F.posexplode("bkeys").alias("band_idx", "band_key"),
-    )
+    ]
+    return doc, aggs, banded, exploded
 
 
 def _earlier_collision(a: str, b: str):
@@ -351,26 +384,36 @@ def _verified_pairs(
     corpus-scale self-join callers (``minhash_pairs`` over a whole
     corpus) must keep the default shuffled join — a corpus broadcast
     would be exactly wrong at 100 TB."""
+    cond, out, keep = _COLUMNS.get(
+        ("verified", threshold), lambda: _verified_columns(threshold)
+    )
     left = bands.alias("l")
     right = F.broadcast(bands.alias("r")) if broadcast_right else bands.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc") < F.col("r.doc"))
-            & ~_earlier_collision("l", "r"),
-        )
-        .select(
-            F.col("l.doc").alias("doc_a"),
-            F.col("r.doc").alias("doc_b"),
-            (
-                F.size(F.array_intersect("l.sh", "r.sh"))
-                / F.size(F.array_union("l.sh", "r.sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return left.join(right, cond).select(*out).filter(keep)
+
+
+def _verified_columns(threshold: float) -> tuple:
+    """Join condition, select list and filter of ``_verified_pairs``."""
+    cond = (
+        (F.col("l.band_idx") == F.col("r.band_idx"))
+        & (F.col("l.band_key") == F.col("r.band_key"))
+        & (F.col("l.doc") < F.col("r.doc"))
+        & ~_earlier_collision("l", "r")
     )
+    out = [
+        F.col("l.doc").alias("doc_a"),
+        F.col("r.doc").alias("doc_b"),
+        _jaccard("l", "r"),
+    ]
+    return cond, out, F.col("jaccard") >= threshold
+
+
+def _jaccard(a: str, b: str):
+    """Exact Jaccard of the two sketch rows' carried shingle sets."""
+    return (
+        F.size(F.array_intersect(f"{a}.sh", f"{b}.sh"))
+        / F.size(F.array_union(f"{a}.sh", f"{b}.sh"))
+    ).alias("jaccard")
 
 
 def incremental_minhash_pairs(
@@ -554,25 +597,28 @@ def _probe_pairs_from_sketches(
     ``new_bands`` (round 11: lets the ingest loop sketch each batch once
     and reuse it for the probe, the within-batch check, and the state
     write)."""
+    cond, out, keep = _COLUMNS.get(
+        ("probe", threshold), lambda: _probe_columns(threshold)
+    )
     nb = new_bands.alias("n")
     cb = corpus_sketch.alias("c")
-    return (
-        cb.join(
-            F.broadcast(nb),
-            (F.col("n.band_idx") == F.col("c.band_idx"))
-            & (F.col("n.band_key") == F.col("c.band_key"))
-            & ~_earlier_collision("n", "c"),
-        )
-        .select(
-            F.col("n.doc").alias("new_doc"),
-            F.col("c.doc").alias("dup_of"),
-            (
-                F.size(F.array_intersect("n.sh", "c.sh"))
-                / F.size(F.array_union("n.sh", "c.sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return cb.join(F.broadcast(nb), cond).select(*out).filter(keep)
+
+
+def _probe_columns(threshold: float) -> tuple:
+    """Join condition, select list and filter of
+    ``_probe_pairs_from_sketches``."""
+    cond = (
+        (F.col("n.band_idx") == F.col("c.band_idx"))
+        & (F.col("n.band_key") == F.col("c.band_key"))
+        & ~_earlier_collision("n", "c")
     )
+    out = [
+        F.col("n.doc").alias("new_doc"),
+        F.col("c.doc").alias("dup_of"),
+        _jaccard("n", "c"),
+    ]
+    return cond, out, F.col("jaccard") >= threshold
 
 
 # --- SimHash ---------------------------------------------------------------------

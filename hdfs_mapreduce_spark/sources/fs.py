@@ -19,12 +19,32 @@ implementation.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from hdfs_mapreduce_spark.functions.jvm_memo import JvmMemo
+
+# JVM classes resolved once per py4j gateway: walking
+# ``spark._jvm.org.apache.hadoop.fs.Path`` costs one reflection round
+# trip per package segment, on every call.
+_CLASSES = JvmMemo(lambda: SparkContext._gateway)
+
+
+def _jclass(spark: SparkSession, name: str):
+    """The JavaClass for the fully qualified ``name``."""
+
+    def resolve():
+        cls = spark._jvm
+        for part in name.split("."):
+            cls = getattr(cls, part)
+        return cls
+
+    return _CLASSES.get(name, resolve)
 
 
 def jpath(spark: SparkSession, path_str: str):
     """org.apache.hadoop.fs.Path for any URI or bare path."""
-    return spark._jvm.org.apache.hadoop.fs.Path(path_str)
+    return _jclass(spark, "org.apache.hadoop.fs.Path")(path_str)
 
 
 def fs_and_path(spark: SparkSession, path_str: str):
@@ -73,7 +93,7 @@ def read_text(spark: SparkSession, path_str: str) -> str:
     fs, p = fs_and_path(spark, path_str)
     stream = fs.open(p)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
+        return _jclass(spark, "org.apache.commons.io.IOUtils").toString(
             stream, "UTF-8"
         )
     finally:
@@ -114,13 +134,13 @@ def write_text_atomic(spark: SparkSession, path_str: str, text: str) -> bool:
     except Exception:
         scheme = None
     if scheme == "file":
-        jvm = spark._jvm
+        jfile = _jclass(spark, "java.io.File")
         try:
             # java.io.File(...).toPath() rather than Paths.get(...):
             # Paths.get is varargs, which py4j cannot dispatch.
-            jvm.java.nio.file.Files.createLink(
-                jvm.java.io.File(dst.toUri().getPath()).toPath(),
-                jvm.java.io.File(tmp.toUri().getPath()).toPath(),
+            _jclass(spark, "java.nio.file.Files").createLink(
+                jfile(dst.toUri().getPath()).toPath(),
+                jfile(tmp.toUri().getPath()).toPath(),
             )
             won = True
         except Exception as exc:

@@ -33,7 +33,9 @@ by a stream clock instead of cron.
 from __future__ import annotations
 
 import time
+from collections.abc import Iterable
 from contextlib import contextmanager
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,6 +150,37 @@ def _read_batch_dirs(
     )
 
 
+def _rejected_ids(evidence: Iterable[tuple[bool, Any, Any]]) -> set:
+    """The ids one micro-batch rejects, from its reject evidence rows
+    ``(corpus, a, b)``: ``(True, d, d)`` says batch doc ``d`` near-dups
+    an accepted corpus doc; ``(False, a, b)`` is a verified within-batch
+    pair with ``a < b``.
+
+    A corpus hit is rejected. A within-batch pair rejects ``b`` only when
+    neither ``a`` nor ``b`` is a corpus hit: the within-batch check runs
+    among the docs that survived the corpus probe, so a pair whose smaller
+    doc was already rejected against the corpus decides nothing (a ``b``
+    that is a hit is rejected either way).
+
+    Within-batch policy: reject any document that has a SMALLER near-dup
+    neighbor in the same batch. For clique-shaped duplicate groups this
+    keeps exactly the cluster minimum; for chain shapes it is
+    conservative — the tail of a chain is rejected even though its own
+    duplicate was also rejected (A-B, B-C drops both B and C). That bias
+    is deliberate for an ingest gate (never admit anything with an
+    already-seen smaller near-dup); when maximal recall of unique content
+    matters, run cluster-canonical admission instead
+    (operators/components.canonical_assignment keeps one doc per
+    connected component)."""
+    rows = list(evidence)
+    hits = {b for corpus, _, b in rows if corpus}
+    return hits | {
+        b
+        for corpus, a, b in rows
+        if not corpus and a not in hits and b not in hits
+    }
+
+
 def dedup_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -232,35 +265,26 @@ def dedup_ingest_batch(
         # empty — the `children` listing above already told us whether the
         # record exists, so the happy path pays no extra metadata RPC.
         _write_shape_meta(spark, state_dir, n_perm, n_bands)
-    # The batch's banded sketch is built ONCE (round 11: the previous
-    # shape ran the shingle scan + signature groupBy THREE times per
-    # micro-batch), and — r13 — the three batch-bounded relations the
-    # two state writes share (the sketch itself + the two reject sets)
-    # are EAGERLY localCheckpoint'ed instead of persist()ed. persist
-    # caches the DATA but every later action still re-ANALYZES the full
-    # logical subtree (shingle explode + 16-32 MIN aggregates +
-    # posexplode + the corpus probe join): Spark analyzes eagerly per
-    # transformation, and the r13 decomposition measured this loop as
-    # majority driver-side gaps (stream_dedup_maintained: 10.4s gaps vs
-    # 5.4s job time, 50 jobs — PHASE_TOTALS put 13.4s under the accepted
-    # write alone, most of it analysis of the nested plan). Checkpointing
-    # truncates every downstream plan to a LogicalRDD leaf (guide §3.3:
-    # materialising an intermediate truncates the plan; §5:
-    # localCheckpoint as the cheap lineage cut). All three relations are
-    # batch-bounded by the ingest contract, so executor-local checkpoint
-    # storage costs what the replaced persist cost, and the
-    # CheckpointJanitor frees every block before return (the repo's
-    # no-cache-outlives-the-call rule; lost checkpoint blocks on a dying
-    # executor fail the batch, which replays idempotently — the same
-    # recovery path any mid-batch failure already takes).
-    # Every reject set below is duplicate-id-sized (bounded by the batch),
-    # so each anti-join hints its reject side as a broadcast build: the
-    # default planner shaped all four of them as SortMergeJoin LeftAnti
-    # (captured in plans/r12/dedup_ingest_*_bcast_before.txt) — two
-    # exchanges + two sorts per join, per micro-batch, to anti-join a
-    # relation the ingest contract bounds at batch size. Broadcast is the
-    # scale-correct strategy at ANY corpus size for the same reason the
-    # corpus probe already broadcasts the batch sketch (guide §3.1).
+    # One action decides the batch. The banded sketch is built ONCE and
+    # eagerly localCheckpoint'ed: every later plan (the corpus probe, the
+    # within-batch pair check, the sketch write) starts from a LogicalRDD
+    # leaf instead of re-analyzing the shingle explode + 16-32 MIN
+    # aggregates, and the batch is scanned once. The reject EVIDENCE —
+    # corpus-probe hits unioned with within-batch verified pairs — then
+    # comes back in ONE collect, the admission rule runs on the driver
+    # (``_rejected_ids``), and both state writes filter on the resulting
+    # id set. Both evidence halves are bounded by the batch, not the
+    # corpus: a hit row is one (new doc, corpus doc) pair emitted once
+    # (first-band-wins), no two corpus docs near-dup each other (each
+    # passed this gate) so a new doc meets few of them, and the
+    # within-batch pairs are the batch's own near-dup pairs. Shipping
+    # them to the driver costs less than keeping the reject sets
+    # distributed, which took a job, an exchange and a plan analysis per
+    # reject set and per anti-join. The CheckpointJanitor frees the
+    # checkpoint before return (the repo's no-cache-outlives-the-call
+    # rule; a lost checkpoint block on a dying executor fails the batch,
+    # which replays idempotently — the same recovery path any mid-batch
+    # failure already takes).
     from hdfs_mapreduce_spark.functions.checkpoints import CheckpointJanitor
 
     janitor = CheckpointJanitor(spark)
@@ -268,66 +292,40 @@ def dedup_ingest_batch(
         with _tick("sketch_batch"):
             batch_bands = _banded_sketch(
                 batch_df, id_col, text_col, n_perm, n_bands
-            ).localCheckpoint(eager=False)
-        survivors = batch_df
-        surv_bands = batch_bands
-        if corpus_sketch is not None:
-            with _tick("probe_corpus"):
-                dup_vs_corpus = (
-                    _probe_pairs_from_sketches(
-                        corpus_sketch, batch_bands, threshold
-                    )
-                    .select(F.col("new_doc").alias(id_col))
-                    .distinct()
-                    .localCheckpoint(eager=False)
+            ).localCheckpoint()
+        with _tick("reject_evidence"):
+            evidence = _verified_pairs(
+                batch_bands, threshold, broadcast_right=True
+            ).select(
+                F.lit(False).alias("corpus"),
+                F.col("doc_a").alias("a"),
+                F.col("doc_b").alias("b"),
+            )
+            if corpus_sketch is not None:
+                hits = _probe_pairs_from_sketches(
+                    corpus_sketch, batch_bands, threshold
+                ).select(
+                    F.lit(True).alias("corpus"),
+                    F.col("new_doc").alias("a"),
+                    F.col("new_doc").alias("b"),
                 )
-            survivors = survivors.join(
-                F.broadcast(dup_vs_corpus), id_col, "left_anti"
-            )
-            surv_bands = surv_bands.join(
-                F.broadcast(dup_vs_corpus.select(F.col(id_col).alias("doc"))),
-                "doc",
-                "left_anti",
-            )
-        # Within-batch policy: reject any document that has a SMALLER
-        # near-dup neighbor in the same batch (pairs come as doc_a <
-        # doc_b; every doc_b drops). For clique-shaped duplicate groups
-        # this keeps exactly the cluster minimum; for chain shapes it is
-        # conservative — the tail of a chain is rejected even though its
-        # own duplicate was also rejected (A-B, B-C drops both B and C).
-        # That bias is deliberate for an ingest gate (never admit
-        # anything with an already-seen smaller near-dup); when maximal
-        # recall of unique content matters, run cluster-canonical
-        # admission instead (operators/components.canonical_assignment
-        # keeps one doc per connected component).
-        with _tick("within_batch_check"):
-            within_rejects = (
-                _verified_pairs(surv_bands, threshold, broadcast_right=True)
-                .select(F.col("doc_b").alias(id_col))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-        survivors = survivors.join(
-            F.broadcast(within_rejects), id_col, "left_anti"
-        )
-        # The two state writes are independent jobs over the checkpointed
-        # relations (different output dirs, no shared mutable state), so
-        # they are submitted CONCURRENTLY on the shared bounded driver
-        # pool (guide §2.6; functions/driverpool.py explains why a
-        # persistent pool, never per-use threads — py4j pinned mode
-        # leaks one parked JVM thread per exited Python thread). Each
-        # write's driver-side analysis/codegen overlaps the other's
-        # executor work. Crash semantics are unchanged: either dir may
-        # exist without the other after a mid-batch crash, exactly as
-        # with sequential writes, and the replay overwrites both.
+                evidence = hits.unionByName(evidence)
+            rejects = list(_rejected_ids(evidence.collect()))
+        survivors, sketch_out = batch_df, batch_bands
+        if rejects:
+            survivors = batch_df.filter(~F.col(id_col).isin(rejects))
+            sketch_out = batch_bands.filter(~F.col("doc").isin(rejects))
+        # The two state writes are independent jobs (different output
+        # dirs, no shared mutable state), so they are submitted
+        # CONCURRENTLY on the shared bounded driver pool (guide §2.6;
+        # functions/driverpool.py explains why a persistent pool, never
+        # per-use threads — py4j pinned mode leaks one parked JVM thread
+        # per exited Python thread). Each write's driver-side
+        # analysis/codegen overlaps the other's executor work. Crash
+        # semantics are unchanged: either dir may exist without the other
+        # after a mid-batch crash, exactly as with sequential writes, and
+        # the replay overwrites both.
         with _tick("state_writes"):
-            sketch_out = surv_bands.join(
-                F.broadcast(
-                    within_rejects.select(F.col(id_col).alias("doc"))
-                ),
-                "doc",
-                "left_anti",
-            )
             from hdfs_mapreduce_spark.functions.driverpool import (
                 run_concurrently,
             )

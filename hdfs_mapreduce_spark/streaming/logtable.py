@@ -11,12 +11,14 @@ parquet + the Hadoop FS API (sources/fs.py), with the same layout ideas
 the real formats use:
 
     root/
-      _log/v{N}.commit  tiny JSON commit record: batch id, kind, and the
-                        unique data dir of commit N. The filename IS the
-                        version slot — concurrent writers collide on the
-                        atomic rename and exactly one wins. Reading the
-                        log is one listing + one ~100-byte read per
-                        commit.
+      _log/v{N}.commit  tiny JSON commit record: batch id, kind, the
+                        unique data dir of commit N, and ``schema`` —
+                        the Spark JSON schema of its rows, so readers
+                        never infer it from parquet footers. The
+                        filename IS the version slot — concurrent
+                        writers collide on the atomic rename and exactly
+                        one wins. Reading the log is one listing + one
+                        small read per commit.
       data/a{tok}/      immutable row files for one commit ATTEMPT (an
                         upsert batch, delete tombstones, or the full
                         compacted snapshot). The name is a version-free
@@ -48,6 +50,10 @@ the real formats use:
   newest row per key (ROW_NUMBER over (key) ORDER BY version DESC —
   within a version keys are unique because commits dedupe their batch).
   One shuffle on the key, proportional to LIVE data — never a rewrite.
+  Each version is read with the schema its commit recorded, so a
+  snapshot costs the same jobs whatever its live-version count (parquet
+  schema inference is one footer-reading job per version); versions
+  committed without a recorded schema (older tables) are inferred.
 * **Replay safety**: foreachBatch is at-least-once and a blind append is
   NOT idempotent, so commits record their batch id and a replayed batch
   whose id is already the newest committed entry no-ops — the same rule
@@ -160,21 +166,26 @@ class ConcurrentCommitError(RuntimeError):
 
 def _log_versions(
     spark: SparkSession, root: str
-) -> list[tuple[int, int | None, str, str, str | None, float | None]]:
+) -> list[
+    tuple[int, int | None, str, str, str | None, float | None, str | None]
+]:
     """Committed log entries ascending by version:
     ``(version, batch_id or None, kind, data_dir_name, writer or None,
-    commit wall-clock ts or None)`` — ts is None for pre-r8 commits and
-    legacy filename-only entries.
+    commit wall-clock ts or None, schema or None)`` — ts is None for
+    pre-r8 commits and legacy filename-only entries; schema (the rows'
+    ``StructType.json()``) is None for commits written before it was
+    recorded and for legacy entries.
 
     Current grammar: one ``v{N}.commit`` file per version — the FILENAME
     is the version slot (so two concurrent writers of version N collide
     on the atomic rename and exactly one wins), the JSON body carries
-    batch id, kind, and the unique data directory that commit's rows
-    live in. A log CHECKPOINT (``c{N}.checkpoint``, written by
-    ``checkpoint_log`` — the real formats' _last_checkpoint) summarizes
-    every entry ≤ N in one file, so a long-lived table's log read is one
-    listing + ONE checkpoint read + one read per commit SINCE the
-    checkpoint — bounded regardless of table age. Legacy entries
+    batch id, kind, the unique data directory that commit's rows live
+    in, writer, ts and schema. A log CHECKPOINT (``c{N}.checkpoint``,
+    written by ``checkpoint_log`` — the real formats' _last_checkpoint)
+    summarizes every entry ≤ N, schema included, in one file (an entry
+    without ``schema`` parses as None), so a long-lived table's log
+    read is one listing + ONE checkpoint read + one read per commit
+    SINCE the checkpoint — bounded regardless of table age. Legacy entries
     (``v{N}[_b{B}].{kind}`` — round-6 first half, all metadata in the
     name, data at ``data/v{N}``) still parse, content-free. Malformed
     or dot-prefixed names (in-flight tmp files) are invisible."""
@@ -225,6 +236,7 @@ def _log_versions(
                     rec["data"],
                     rec.get("writer"),
                     rec.get("ts"),
+                    rec.get("schema"),
                 )
                 for rec in recs
             ]
@@ -269,6 +281,7 @@ def _log_versions(
                     rec.get("data") or f"v{int(core[1:])}",
                     rec.get("writer"),
                     rec.get("ts"),
+                    rec.get("schema"),
                 )
             )
         elif kind in _KINDS:  # legacy filename-only entries
@@ -283,6 +296,7 @@ def _log_versions(
                     int(btag) if btag else None,
                     kind,
                     f"v{int(vpart)}",
+                    None,
                     None,
                     None,
                 )
@@ -322,8 +336,9 @@ def checkpoint_log(spark: SparkSession, root: str) -> int | None:
                 "data": d,
                 "writer": w,
                 "ts": ts,
+                "schema": schema,
             }
-            for v, b, k, d, w, ts in entries
+            for v, b, k, d, w, ts, schema in entries
         ]
     )
     # Losing the rename means a same-N checkpoint (identical content by
@@ -423,6 +438,7 @@ def _commit(
     if _is_replay(entries, batch_id, writer):
         return None
     data_name = f"a{uuid.uuid4().hex[:12]}"
+    schema = rows.schema.json()
     rows.write.mode("overwrite").parquet(hfs.join(root, "data", data_name))
     log_dir = hfs.join(root, "_log")
     hfs.mkdirs(spark, log_dir)
@@ -444,6 +460,9 @@ def _commit(
             # are version-ordered), so clock skew costs only retention
             # precision — the same contract Delta's timestamps carry.
             "ts": time.time(),
+            # lets snapshot() read this version without a parquet
+            # schema-inference job
+            "schema": schema,
         }
         if backend.put_if_absent(
             spark,
@@ -547,12 +566,10 @@ def snapshot(
         return None
     compactions = [e[0] for e in entries if e[2] == "compact"]
     floor = max(compactions) if compactions else 0
-    live = [(e[0], e[3]) for e in entries if e[0] >= floor]
     parts = [
-        spark.read.parquet(hfs.join(root, "data", data)).withColumn(
-            "_v", F.lit(v)
-        )
-        for v, data in live
+        _read_version(spark, root, e[3], e[6]).withColumn("_v", F.lit(e[0]))
+        for e in entries
+        if e[0] >= floor
     ]
     allrows = parts[0]
     for p in parts[1:]:
@@ -568,6 +585,21 @@ def snapshot(
             ~F.coalesce(F.col("_deleted"), F.lit(False))
         ).drop("_deleted")
     return out
+
+
+def _read_version(
+    spark: SparkSession, root: str, data: str, schema: str | None
+) -> DataFrame:
+    """One committed data version, read with its recorded schema when the
+    commit has one (no footer-inference job), inferred otherwise."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(hfs.join(root, "data", data))
 
 
 def vacuum(

@@ -32,6 +32,23 @@ def spark():
     spark.stop()
 
 
+def spark_jobs_run_by(spark, action) -> int:
+    """How many Spark jobs ``action()`` ran, read from the status
+    tracker. The listener bus is drained before each read, so jobs that
+    just finished are registered. Counts jobs with no job group, which
+    covers work submitted from the driver pool's threads too (they
+    inherit no group)."""
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    before = job_ids()
+    action()
+    return len(job_ids() - before)
+
+
 @pytest.fixture(scope="session")
 def ddb():
     """DuckDB connection with the test tables registered as views, mirroring

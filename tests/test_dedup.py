@@ -1066,3 +1066,58 @@ def test_exact_substring_runs_boilerplate_cap(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in uncapped} == {
         (a, b) for a in range(1, 6) for b in range(a + 1, 6)
     }
+
+
+_MEMO_RESTART = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from hdfs_mapreduce_spark.operators import dedup as dd
+from hdfs_mapreduce_spark.session import get_spark
+from hdfs_mapreduce_spark.sources import fs as hfs
+
+DOCS = [(1, {base!r}), (2, {near!r}), (3, {other!r})]
+KEYS = [("sketch", 16, 8), ("verified", 0.5)]
+
+
+def run(tag):
+    spark = get_spark("memo-" + tag)
+    spark.sparkContext.setLogLevel("ERROR")
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    pairs = sorted(tuple(r) for r in dd.minhash_pairs(df, "doc_id", "text", 0.5, 16, 8).collect())
+    trees = [dd._COLUMNS.get(k, lambda: None) for k in KEYS]
+    assert all(t is not None for t in trees), trees
+    assert hfs.exists(spark, {repo!r})
+    return spark, pairs, trees
+
+
+spark, first, old = run("a")
+spark.stop()
+spark, second, new = run("b")
+assert first == second and first, (first, second)
+assert all(a is not b for a, b in zip(old, new)), "memoized trees were reused"
+spark.stop()
+print("MEMO-OK")
+"""
+
+
+def test_memoized_columns_rebuild_after_session_restart():
+    """The sketch path's memoized Column trees belong to one live
+    SparkContext: after ``spark.stop()`` and a new session in the same
+    process they are rebuilt, not reused, and the results are the same.
+    Runs in a subprocess so the shared test session is never stopped."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = _MEMO_RESTART.format(repo=repo, base=BASE, near=NEAR, other=OTHER)
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "MEMO-OK" in out.stdout

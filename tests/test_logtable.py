@@ -189,8 +189,75 @@ def test_schema_evolution_null_fills_old_versions(spark, tmp_path):
     upsert_batch(_batch(spark, [(1, "a")]), 0, root, "k")
     wide = spark.createDataFrame([(2, "b", 7)], "k long, v string, extra long")
     upsert_batch(wide, 1, root, "k")
+    # both versions are read with the schema their commit recorded
+    assert all(e[6] for e in _log_versions(spark, root))
     rows = {r["k"]: (r["v"], r["extra"]) for r in snapshot(spark, root, "k").collect()}
     assert rows == {1: ("a", None), 2: ("b", 7)}
+
+
+def test_snapshot_jobs_do_not_grow_with_live_versions(spark, tmp_path):
+    """Recorded schemas spare the per-version parquet schema-inference
+    job: a snapshot over 4 live versions runs as many jobs as over 1."""
+    from tests.conftest import spark_jobs_run_by
+
+    root = str(tmp_path / "t")
+    upsert_batch(_batch(spark, [(1, "a")]), 0, root, "k")
+    one = spark_jobs_run_by(
+        spark, lambda: snapshot(spark, root, "k").collect()
+    )
+    for b in range(1, 4):
+        upsert_batch(_batch(spark, [(b, f"v{b}")]), b, root, "k")
+    four = spark_jobs_run_by(
+        spark, lambda: snapshot(spark, root, "k").collect()
+    )
+    assert one == four, (one, four)
+
+
+def test_commits_without_recorded_schema_still_read(spark, tmp_path):
+    """Tables written before commits recorded their schema: earlier
+    commit records and a log checkpoint without the ``schema`` field,
+    mixed with newer commits that have it (including a schema change),
+    give the same snapshot as when every version records its schema."""
+    import json
+
+    from hdfs_mapreduce_spark.streaming.logtable import checkpoint_log
+
+    def read(**kw):
+        snap = snapshot(spark, root, "k", **kw)
+        return snap.columns, sorted(tuple(r) for r in snap.collect())
+
+    root = str(tmp_path / "t")
+    wide = "k long, v string, extra long"
+    upsert_batch(_batch(spark, [(1, "a"), (2, "b")]), 0, root, "k")
+    upsert_batch(_batch(spark, [(2, "B"), (3, "c")]), 1, root, "k")
+    assert checkpoint_log(spark, root) == 1
+    upsert_batch(spark.createDataFrame([(3, "C", 9)], wide), 2, root, "k")
+    upsert_batch(_batch(spark, [(4, "d")]), 3, root, "k")
+    upsert_batch(spark.createDataFrame([(1, "A", 5)], wide), 4, root, "k")
+    recorded = read()
+    assert recorded == (
+        ["k", "v", "extra"],
+        [(1, "A", 5), (2, "B", None), (3, "C", 9), (4, "d", None)],
+    )
+    # strip the field from the older records, as earlier writers left them
+    log_dir = os.path.join(root, "_log")
+    for name in ("v0.commit", "v1.commit", "v2.commit", "c1.checkpoint"):
+        path = os.path.join(log_dir, name)
+        with open(path) as f:
+            rec = json.load(f)
+        for r in rec if isinstance(rec, list) else [rec]:
+            del r["schema"]
+        with open(path, "w") as f:
+            json.dump(rec, f)
+    assert [e[6] is None for e in _log_versions(spark, root)] == [
+        True, True, True, False, False,
+    ]
+    assert read() == recorded
+    # compaction reads the mixed log and records the merged schema
+    cv = compact(spark, root, "k")
+    assert _log_versions(spark, root)[-1][6] is not None
+    assert read() == recorded
+    assert read(as_of=cv - 1) == recorded
 
 
 def test_table_changes_insert_update_delete_and_netting(spark, tmp_path):

@@ -85,7 +85,7 @@ def test_two_real_writer_processes_never_collide(spark, tmp_path):
     assert len(entries) == 12
     assert versions == sorted(versions) and len(set(versions)) == 12
     by_writer = {}
-    for v, bid, kind, data, writer, _ts in entries:
+    for v, bid, kind, data, writer, *_ in entries:
         assert kind == "upsert"
         by_writer.setdefault(writer, []).append(bid)
     assert sorted(by_writer) == ["alpha", "beta"]
@@ -202,7 +202,7 @@ def test_four_contended_writers_land_every_batch_without_livelock(
     assert len(entries) == 24
     assert versions == sorted(versions) and versions == list(range(24))
     by_writer = {}
-    for v, bid, kind, data, writer, _ts in entries:
+    for v, bid, kind, data, writer, *_ in entries:
         assert kind == "upsert"
         by_writer.setdefault(writer, []).append(bid)
     assert sorted(by_writer) == writers

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from hdfs_mapreduce_spark.streaming.events import (
     sessionize,
     stream_windowed_event_stats,
@@ -986,6 +988,63 @@ def test_dedup_ingest_batch_resolves_shape_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sd, "_probe_pairs_from_sketches", counting_probe)
     sd.dedup_ingest_batch(halves[1], 1, state)
     assert calls == {"resolve": 1, "sketch": 1, "probe": 1}
+
+
+def test_dedup_ingest_batch_job_count_is_bounded(spark, tmp_path):
+    """A micro-batch that probes existing state decides its admissions in
+    one action: at most 10 Spark jobs (the shape probe, the eager batch
+    checkpoint, one evidence collect and the two state writes — the
+    earlier shape of lazy checkpoints and broadcast anti-joins ran 14)."""
+    from pyspark.sql import functions as F
+
+    from hdfs_mapreduce_spark.sources.catalog import load_table
+    from hdfs_mapreduce_spark.streaming.dedup import (
+        dedup_ingest_batch,
+        read_accepted,
+    )
+    from tests.conftest import spark_jobs_run_by
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    thirds = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    state = str(tmp_path / "jobs")
+    dedup_ingest_batch(thirds[0], 0, state)
+    dedup_ingest_batch(thirds[1], 1, state)
+    n = spark_jobs_run_by(
+        spark, lambda: dedup_ingest_batch(thirds[2], 2, state)
+    )
+    assert 0 < n <= 10, n
+    assert read_accepted(spark, state).count() > 0
+
+
+def _reject_rule_before_one_action(batch, hits, pairs):
+    """The admission rule as the ingest applied it with distributed
+    anti-joins: drop the corpus hits, compute the within-batch pairs
+    among the survivors only, and reject the larger doc of each."""
+    survivors = set(batch) - set(hits)
+    within = {b for a, b in pairs if a in survivors and b in survivors}
+    return set(hits) | within
+
+
+@pytest.mark.parametrize(
+    "batch, hits, pairs",
+    [
+        # chain A-B, B-C where B also near-dups the corpus
+        ([1, 2, 3], [2, 2], [(1, 2), (2, 3)]),
+        # empty batch
+        ([], [], []),
+        # every document is a duplicate: of the corpus or of a batch peer
+        ([10, 11, 12, 13], [10, 11, 11], [(10, 12), (11, 13), (12, 13)]),
+    ],
+    ids=["chain_through_corpus_hit", "empty", "all_duplicates"],
+)
+def test_reject_rule_admits_what_the_anti_join_rule_did(batch, hits, pairs):
+    from hdfs_mapreduce_spark.streaming.dedup import _rejected_ids
+
+    evidence = [(True, h, h) for h in hits] + [(False, a, b) for a, b in pairs]
+    got = _rejected_ids(evidence)
+    want = _reject_rule_before_one_action(batch, hits, pairs)
+    assert got == want
+    assert set(batch) - got == set(batch) - want
 
 
 def test_resketch_state_matches_wide_from_scratch(spark, tmp_path):
